@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: every declared query against SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
@@ -121,13 +120,20 @@ object Bench {
     * None and the telemetry simply disables. */
   private[graft] def stealJiffies(): Option[(Long, Long)] =
     try {
-      val cpu = new String(java.nio.file.Files.readAllBytes(
+      new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-        .linesIterator.find(_.startsWith("cpu ")).get
-      val f = cpu.trim.split("\\s+").drop(1).map(_.toLong)
-      // user nice system idle iowait irq softirq steal [guest guest_nice]
-      if (f.length < 8) None else Some((f(7), f.sum))
+        .linesIterator.find(_.startsWith("cpu ")).flatMap(parseCpuLine)
     } catch { case _: Exception => None }
+
+  /** (steal, total) jiffies of one `/proc/stat` aggregate `cpu ` line:
+    * user nice system idle iowait irq softirq steal [guest guest_nice].
+    * The total is the first 8 fields only — the kernel already counts
+    * guest time inside user and guest_nice inside nice, so summing them
+    * again would inflate the denominator. None when the line is short
+    * or not numeric. */
+  private[graft] def parseCpuLine(line: String): Option[(Long, Long)] =
+    scala.util.Try(line.trim.split("\\s+").drop(1).take(8).map(_.toLong))
+      .toOption.filter(_.length == 8).map(f => (f(7), f.sum))
 
   /** Percent of elapsed CPU time stolen between two stealJiffies samples. */
   private[graft] def stealPct(a: Option[(Long, Long)],
@@ -189,9 +195,9 @@ object Bench {
     }.toSeq.sorted
 
   def main(args: Array[String]): Unit = {
-    // cpus must be known BEFORE the session exists (master URL), so it
-    // stays env-only; everything post-session reads GraftConfig (R15).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // cpus is env-only (GraftSession.envCpus); everything post-session
+    // reads GraftConfig (R15).
+    val cpus = GraftSession.envCpus
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     // Host-load self-defense (round-12 verdict #5): this host smears
     // identical binaries 1.3-7x under background load, and every
@@ -295,19 +301,10 @@ object Bench {
     val stealWarnThreshold = sys.env
       .getOrElse("SPARK_GRAFT_BENCH_STEAL_WARN", "5.0").toDouble
     val stealStart = stealJiffies()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Fixture parquet is one row group per table: enable the scan shim.
-      .config("spark.graft.singleRowgroupShim", "true")
-      // The fixture harness may run the O(n^2) exact ground-truth twin
-      // (q_dedup_embedding); production sessions must not (round-4 #5).
-      .config("spark.graft.allowQuadratic", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The fixture harness may run the O(n^2) exact ground-truth twin
+    // (q_dedup_embedding); production sessions must not (round-4 #5).
+    val spark = GraftSession.local(cpus,
+      "spark.graft.allowQuadratic" -> "true")
     val sfDir = GraftConfig.from(spark).sfDir
 
     // Cache hygiene (round-3 verdict #1): the dedup-sketch queries persist
@@ -519,8 +516,10 @@ object Bench {
     // comparison. This line carries every scalar of the record plus a
     // pointer to the durable per-query file, stays well under the tail
     // budget, and is the LAST stdout write so the tail always holds it
-    // whole. It ADDS a line; the contract line above is unchanged.
-    val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries_file":"$outPath","failed":$fs$onlyField,"iters":$iters,"stat":"$stat","loadavg_start":$loadStart,"load_warn":$loadWarn,"waited_quiet_sec":$waitedSec,"concurrent_bench":$concurrentBench,"smear_keys_final":${smearFinal.size},"smear_suspect":$smearSuspect$stealFields,"cpus":$cpus,"sf":"$sfDir"}"""
+    // whole. It ADDS a line; the contract line above is unchanged. Its
+    // own marker ("total_compact") keeps a last-line reader from taking
+    // it for the full record.
+    val compact = s"""{"metric":"total_compact","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries_file":"$outPath","failed":$fs$onlyField,"iters":$iters,"stat":"$stat","loadavg_start":$loadStart,"load_warn":$loadWarn,"waited_quiet_sec":$waitedSec,"concurrent_bench":$concurrentBench,"smear_keys_final":${smearFinal.size},"smear_suspect":$smearSuspect$stealFields,"cpus":$cpus,"sf":"$sfDir"}"""
     println(compact)
   }
 }

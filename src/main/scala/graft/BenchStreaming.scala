@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 
@@ -81,7 +80,7 @@ object BenchStreaming {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCpus
     val osBean =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val warnThreshold = sys.env
@@ -108,15 +107,7 @@ object BenchStreaming {
     val (loadStart, load5Start) = Bench.loadAvgs()
     val loadWarn = isLoaded((loadStart, load5Start))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.graft.sharedKeys", "k1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, "spark.graft.sharedKeys" -> "k1")
 
     val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "120000").toLong
     val rowsPerFile =

@@ -1,9 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: dump formatted physical plans for representative queries
-  * (source for PLANS.md). Usage: runMain graft.DumpPlans [sfDir] */
+/** Dev tool: dump formatted physical plans (source for PLANS.md and the
+  * per-round plan evidence under plans/).
+  *
+  * Usage: runMain graft.DumpPlans [--sf DIR] [--keys k1,k2,...]
+  *          [--out DIR [--suffix S]]
+  *
+  * Defaults: sf0.001 and the curated [[keys]] list. Without `--out` the
+  * plans go to stdout, one `===== key =====` section each; with it each
+  * plan is written to `DIR/<key>.txt` (`DIR/<key>_S.txt` with a suffix).
+  *
+  * The session is the harness session with eager materialization
+  * disabled, so a dump never executes sketch jobs and the dumped plan is
+  * the real pipeline rather than a post-checkpoint LogicalRDD scan.
+  * Iterative fixpoint operators (pagerank / CC consumers) therefore dump
+  * their lazy per-round chain — shape is still readable, rounds are
+  * unrolled.
+  */
 object DumpPlans {
   val keys = Seq(
     "q_scan_pushdown", "q_agg_group", "q_join_multiway", "q_join_theta",
@@ -27,25 +40,41 @@ object DumpPlans {
     "q_zorder_layout", "q_skyline_pareto", "q_k_anonymity",
     "q_affinity_incremental")
 
+  private val usage = "usage: DumpPlans [--sf DIR] [--keys k1,k2,...] " +
+    "[--out DIR [--suffix S]]"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.allowQuadratic", "true") // plan dump, not a run
-      // do NOT execute sketch jobs (eager localCheckpoint) just to dump
-      // a plan — and keep the dumped plan the real pipeline, not the
-      // degenerate post-checkpoint LogicalRDD scan
-      .config("spark.graft.skipEagerMaterialize", "true")
-      .getOrCreate()
+    val opts = args.grouped(2).map {
+      case Array(k @ ("--sf" | "--keys" | "--out" | "--suffix"), v) => k -> v
+      case _ => throw new IllegalArgumentException(usage)
+    }.toMap
+    require(opts.contains("--out") || !opts.contains("--suffix"), usage)
+    val sfDir = opts.getOrElse("--sf", "/root/testdata/sf0.001")
+    val dumpKeys = opts.get("--keys")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(keys)
+    dumpKeys.foreach(k => require(SparkEntry.queries.contains(k),
+      s"unknown query '$k'"))
+    val outDir = opts.get("--out").map(java.nio.file.Paths.get(_))
+    outDir.foreach(java.nio.file.Files.createDirectories(_))
+    val suffix = opts.get("--suffix").map("_" + _).getOrElse("")
+    val spark = GraftSession.local(GraftSession.envCpus,
+      "spark.graft.allowQuadratic" -> "true", // plan dump, not a run
+      "spark.graft.skipEagerMaterialize" -> "true")
     spark.sparkContext.setLogLevel("ERROR")
-    keys.foreach { k =>
-      println(s"\n===== $k =====")
-      println(SparkEntry.queries(k)(spark, sfDir)
+    dumpKeys.foreach { k =>
+      val plan = SparkEntry.queries(k)(spark, sfDir)
         .queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+          org.apache.spark.sql.execution.FormattedMode)
+      outDir match {
+        case Some(dir) =>
+          java.nio.file.Files.write(dir.resolve(s"$k$suffix.txt"),
+            plan.getBytes("UTF-8"))
+          println(s"[dumpplans] wrote $k$suffix.txt")
+        case None =>
+          println(s"\n===== $k =====")
+          println(plan)
+      }
     }
     spark.stop()
   }

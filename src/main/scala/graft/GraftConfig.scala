@@ -23,8 +23,6 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.graft.sfDir`          — fixture dir for Bench/Verify; falls
   *                                    back to SPARK_GRAFT_SF_DIR (the
   *                                    driver's contract), then sf0.1
-  *  - `spark.graft.singleRowgroupShim` — fixture-only scan shim
-  *                                    (queries.par); never set in prod
   *  - `spark.graft.credentials`    ← --credentials (""): path to a sink
   *                                    credentials JSON file. The bridge
   *                                    treats an unusable credentials file
@@ -55,7 +53,6 @@ final case class GraftConfig(
   sharedKeys: Set[String],
   dumpOnly: Boolean,
   sfDir: String,
-  singleRowgroupShim: Boolean,
   credentials: Option[String],
   maxFilesPerTrigger: Int)
 
@@ -81,7 +78,6 @@ object GraftConfig {
       dumpOnly = c("dumpOnly", "false").toBoolean,
       sfDir = c("sfDir",
         sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")),
-      singleRowgroupShim = c("singleRowgroupShim", "false").toBoolean,
       credentials = creds,
       maxFilesPerTrigger = maxFilesPerTrigger(spark))
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,10 @@ object Verify {
     // two; extra names (builder iteration) restrict the dump to those.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Harness input is the single-row-group fixture parquet — opt in to
-      // the scan-parallelism shim (queries.par); prod sessions never do.
-      .config("spark.graft.singleRowgroupShim", "true")
-      // The fixture harness may run the O(n^2) exact ground-truth twin
-      // (q_dedup_embedding); production sessions must not (round-4 #5).
-      .config("spark.graft.allowQuadratic", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The fixture harness may run the O(n^2) exact ground-truth twin
+    // (q_dedup_embedding); production sessions must not (round-4 #5).
+    val spark = GraftSession.local(GraftSession.envCpus,
+      "spark.graft.allowQuadratic" -> "true")
     new java.io.File(outDir).mkdirs()
     var failed = 0
     SparkEntry.queries

@@ -39,7 +39,7 @@ object Cdc {
     * branches: data file, RESOLVED marker, and the 404 fall-through. */
   private[queries] def withPath(o: DataFrame): DataFrame = {
     val ts33 = lpad(col("o_orderkey").cast("string"), 33, "0")
-    par(o).withColumn("path",
+    o.withColumn("path",
       when(col("o_orderkey") % 17 === 0,
         concat(lit("/v1/ord_topic/2024-01-01/"), ts33, lit(".RESOLVED")))
         .when(col("o_orderkey") % 13 === 0,
@@ -76,7 +76,7 @@ object Cdc {
     // Build the ndjson envelope line from orders, then parse it back with
     // from_json and classify insert/delete via `after IS NULL` (R2+R5).
     "q_cdc_envelope_parse" -> ((s, d) => {
-      val o = par(Tables(s, d, "orders"))
+      val o = Tables(s, d, "orders")
       val isDel = col("o_orderkey") % 10 === 0
       val afterJson = to_json(struct(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -138,7 +138,7 @@ object Cdc {
     "q_cdc_schema_evolution" -> ((s, d) => {
       val ts33 = lpad(col("o_orderkey").cast("string"), 33, "0")
       val sid = floor(col("o_orderkey") / 1000).cast("long") + 1
-      val p = par(Tables(s, d, "orders"))
+      val p = Tables(s, d, "orders")
         .withColumn("path", concat(
           lit("/v1/ord_topic/2024-01-01/"), ts33,
           lit("-u"), (col("o_orderkey") % 97).cast("string"),

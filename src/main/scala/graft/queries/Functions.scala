@@ -63,7 +63,7 @@ object Functions {
         .orderBy("doc_id")),
 
     "q_date_funcs" -> ((s, d) =>
-      par(Tables(s, d, "orders")).select(
+      Tables(s, d, "orders").select(
         col("o_orderkey"),
         year(col("o_orderdate")).as("yr"),
         month(col("o_orderdate")).as("mo"),
@@ -79,7 +79,7 @@ object Functions {
         .orderBy("o_orderkey")),
 
     "q_math_funcs" -> ((s, d) =>
-      par(Tables(s, d, "lineitem")).select(
+      Tables(s, d, "lineitem").select(
         col("l_orderkey"), col("l_linenumber"),
         abs(col("l_discount") - 0.05).as("abs_disc_delta"),
         ceil(col("l_extendedprice")).cast("long").as("price_ceil"),
@@ -123,7 +123,7 @@ object Functions {
         .orderBy("vec_id", "pos")),
 
     "q_json_funcs" -> ((s, d) =>
-      par(Tables(s, d, "events")).select(
+      Tables(s, d, "events").select(
         col("event_id"),
         get_json_object(col("props"), "$.k").as("k_str"),
         get_json_object(col("props"), "$.k").cast("int").as("k_int"),
@@ -134,7 +134,7 @@ object Functions {
     // Map built from columns, then flattened to sorted key/value rows —
     // MapType never reaches the oracle compare (hash order unstable, §7.4).
     "q_map_funcs" -> ((s, d) =>
-      par(Tables(s, d, "events"))
+      Tables(s, d, "events")
         .withColumn("m", map(
           lit("etype"), col("event_type"),
           lit("k"), get_json_object(col("props"), "$.k")))

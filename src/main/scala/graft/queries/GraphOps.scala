@@ -138,8 +138,7 @@ object GraphOps {
     * Harness/production sessions always take the stored path. */
   private def storedOr(s: SparkSession, path: String)
       (build: => DataFrame): DataFrame = {
-    val skipEager =
-      s.conf.get("spark.graft.skipEagerMaterialize", "false") == "true"
+    val skipEager = planOnly(s)
     val requireWarm =
       s.conf.get("spark.graft.requireWarmIndex", "false") == "true"
     if (skipEager && requireWarm) {
@@ -609,15 +608,13 @@ object GraphOps {
   private[graft] def pageRank(nodes: DataFrame, edges: DataFrame)
       : DataFrame = {
     val s = nodes.sparkSession
-    val skipEager = s.conf
-      .get("spark.graft.skipEagerMaterialize", "false") == "true"
     val edeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // (pk, deg) for every node, deg 0 for dangling — checkpointed once,
     // reused as the spine of all 8 rounds and the final projection
     val degNodes0 = nodes
       .join(edeg.withColumnRenamed("src", "pk"), Seq("pk"), "left")
       .select(col("pk"), coalesce(col("deg"), lit(0L)).as("deg"))
-    if (skipEager) pageRankLazy(degNodes0, edges)
+    if (planOnly(s)) pageRankLazy(degNodes0, edges)
     else {
       // Round-17 re-plan (guide §2.4/§1.2): the old recurrence carried
       // n and the dangling mass as 1-row broadcast-joined frames, so

@@ -565,9 +565,8 @@ object Joins {
     val master = Tables(s, d, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
         col("c_mktsegment"))
-    // probe side regenerates the planted import feed (par spreads the
-    // single-row-group fixture scan; a no-op in production)
-    val dirty = par(master).select(
+    // probe side regenerates the planted import feed
+    val dirty = master.select(
       col("c_custkey").as("import_id"),
       when(pmod(col("c_custkey"), lit(3)) === 0, upper(col("c_name")))
         .when(pmod(col("c_custkey"), lit(3)) === 1,

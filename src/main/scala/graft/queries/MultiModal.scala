@@ -194,13 +194,14 @@ object MultiModal {
     * cheap. */
   def corpus(spark: SparkSession, dir: String): Dataset[MMRecord] = {
     import spark.implicits._
-    // par(): the payload SYNTHESIS below is the fixture's decode-cost
-    // stand-in; without the single-row-group shim it (and every
-    // downstream mapPartitions that inherits this partitioning, e.g.
-    // frameDedup's decode) runs on ONE core. Real deployments read many
-    // files and never need the shim (round-6 perf audit: q_frame_dedup
-    // spent its whole decode stage single-threaded).
-    par(Tables(spark, dir, "documents"))
+    // The payload SYNTHESIS below is the fixture's decode-cost stand-in.
+    // It runs in the scan's partitions: on one-row-group input that is a
+    // single partition, so it (and every downstream mapPartitions that
+    // inherits this partitioning, e.g. frameDedup's decode) runs on one
+    // core. No repartition is added here: input of many row groups or
+    // files splits the scan on its own, and a forced exchange would be a
+    // full-data shuffle there.
+    Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("n_chars"))
       .as[(Long, String, Long)]
       .map { case (id, text, nChars) =>

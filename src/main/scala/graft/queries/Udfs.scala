@@ -139,7 +139,7 @@ object Udfs {
     "q_heavy_hitters_mg" -> ((s, d) => {
       import s.implicits._
       val k = 128
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables(s, d, "documents")
         .select(explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "").as[String]
       val summary = toks.select(new MisraGriesAgg(k)
@@ -162,7 +162,7 @@ object Udfs {
     "q_heavy_hitters_cms" -> ((s, d) => {
       import s.implicits._
       val depth = 4; val width = 2048
-      val toks = par(Tables(s, d, "documents"))
+      val toks = Tables(s, d, "documents")
         .select(explode(split(lower(col("text")), " ")).as("token"))
         .filter(col("token") =!= "").as[String]
       val sketch = toks.select(new CountMinSketchAgg(depth, width)

@@ -280,13 +280,7 @@ object Windows {
     // ride the Det exact-decimal path; the fill copies those 2dp-rounded
     // doubles verbatim, so forward fill is engine-exact.
     "q_events_gap_fill" -> ((s, d) => {
-      // Round-18: the sf1 core-scaling probe read this key at a c8/c32
-      // ratio of 1.00 with 21 s wall — the per-row timestamp work
-      // (date_trunc + decimal partial agg over the whole events table)
-      // was serialized on the fixture's single-row-group scan. The par
-      // shim (a no-op in production sessions) spreads exactly that map
-      // side; everything downstream was already shuffle-parallel.
-      val hourly = par(Tables(s, d, "events"))
+      val hourly = Tables(s, d, "events")
         .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hr"))
         .agg(count(lit(1)).as("n_events"),
           Det.dsum(col("value")).as("hr_value"))

@@ -7,40 +7,26 @@ package object queries {
   /** A declared query: (session, scale-factor dir) => result frame. */
   type Q = (SparkSession, String) => DataFrame
 
-  /** Local-fixture scan-parallelism shim. The driver's test parquet is one
-    * file with ONE row group per table, so Spark cannot split the scan and
-    * every narrow pipeline runs on a single core until its first shuffle.
-    * Queries whose per-row compute dominates the scan (md5 sketches,
-    * regex routing, json parsing) insert this cheap exchange right after
-    * the scan to spread that work across all cores. A real deployment
-    * reads many row groups/files in parallel and must NOT carry this
-    * repartition — it would be a gratuitous full-data shuffle at 100 TB —
-    * so it is OFF unless the harness opts in via
-    * `spark.graft.singleRowgroupShim=true` (set by Verify/Bench, whose
-    * input IS the single-row-group fixture). Production sessions never set
-    * it and get the clean no-exchange plan.
-    */
-  def par(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    if (s.conf.get("spark.graft.singleRowgroupShim", "false") == "true")
-      df.repartition(s.sparkContext.defaultParallelism)
-    else df
-  }
+  /** Is `s` a plan-inspection session? DumpPlans and the plan-digest
+    * specs set `spark.graft.skipEagerMaterialize=true` so that building a
+    * frame runs no job and persists no cache: every eager helper below
+    * returns its input untouched, and the dumped plan is the real
+    * pipeline rather than a post-checkpoint LogicalRDD scan. */
+  private[queries] def planOnly(s: SparkSession): Boolean =
+    s.conf.get("spark.graft.skipEagerMaterialize", "false") == "true"
 
   /** Persist `df` MEMORY_AND_DISK and eagerly fill the cache with one
     * count, so a frame read by several downstream branches computes its
-    * pipeline exactly once instead of racing per-side. Under the
-    * DumpPlans escape hatch (`spark.graft.skipEagerMaterialize=true`)
-    * it returns `df` untouched: a plan-inspection session must neither
-    * execute the job at frame-BUILD time nor persist a cache that
-    * materializeAndFree would then skip unpersisting (round-10 advice —
-    * the graph operators ran their pair-counts job and leaked the edge
-    * cache in dump sessions). `unpersist()` on the un-persisted frame
-    * is a no-op, so materializeAndFree(handles…) stays correct either
-    * way. */
+    * pipeline exactly once instead of racing per-side. In a
+    * plan-inspection session ([[planOnly]]) it returns `df` untouched: it
+    * must neither execute the job at frame-BUILD time nor persist a cache
+    * that materializeAndFree would then skip unpersisting (round-10
+    * advice — the graph operators ran their pair-counts job and leaked
+    * the edge cache in dump sessions). `unpersist()` on the un-persisted
+    * frame is a no-op, so materializeAndFree(handles…) stays correct
+    * either way. */
   private[queries] def persistEager(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf
-        .get("spark.graft.skipEagerMaterialize", "false") == "true") df
+    if (planOnly(df.sparkSession)) df
     else {
       val p = df.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -54,94 +40,87 @@ package object queries {
     * (the consumer's one action fills this cache as it runs, so the
     * explicit count would be a pure extra job; the per-side race
     * persistEager exists to prevent cannot happen when exactly one
-    * consumer runs first). Honors the DumpPlans escape hatch like
-    * persistEager: a plan-inspection session gets the bare frame and
-    * no cache to leak. */
+    * consumer runs first). A plan-inspection session gets the bare
+    * frame and no cache to leak, like persistEager. */
   private[queries] def persistLazy(df: DataFrame): DataFrame = {
-    if (df.sparkSession.conf
-        .get("spark.graft.skipEagerMaterialize", "false") == "true") df
+    if (planOnly(df.sparkSession)) df
     else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Has Dataset.observe delivered a metric for an eager localCheckpoint
-    * in this JVM? Tri-state: null = untested, TRUE = works (fused
-    * per-round scalars ride the checkpoint job), FALSE = never landed
-    * once — skip the bounded wait for the rest of the JVM and pay the
-    * explicit tiny agg job instead. Defensive: on every Spark version
-    * tested the checkpoint runs through withAction and fires
-    * QueryExecutionListeners, but a hang here would freeze every
-    * fixpoint consumer, so the fallback stays. Shared by the CC kernel's
-    * convergence sum (AnnOps) and PageRank's dangling-mass sum
-    * (GraphOps) — round 17 generalized it out of AnnOps. */
-  @volatile private var observeOnCheckpoint: java.lang.Boolean = null
+  /** Has Dataset.observe delivered a metric in this JVM? Tri-state:
+    * null = untested, TRUE = works (the aggregate rides the action that
+    * materializes the frame), FALSE = never landed once — skip the
+    * bounded wait for the rest of the JVM and pay the explicit tiny agg
+    * job instead. Defensive: on every Spark version tested the action
+    * runs through withAction and fires QueryExecutionListeners, but a
+    * hang here would freeze every caller, so the fallback stays. Shared
+    * by both probes below. */
+  @volatile private var observeDelivers: java.lang.Boolean = null
 
-  /** Eagerly checkpoint `df` and return it with the value of `metric`
-    * (a long-valued aggregate over df's rows) WITHOUT a second job: the
-    * aggregate rides the checkpoint's own action as a Dataset.observe
-    * metric. The old shape re-scanned every checkpointed round with a
-    * separate agg action — one extra job per round for every fixpoint
-    * consumer. Callers must coalesce the metric so an empty frame gives
-    * 0, not null. */
-  private[queries] def checkpointedWithSum(
-      df: DataFrame, metric: Column): (DataFrame, Long) = {
-    def explicit(out: DataFrame): Long =
-      out.agg(metric).head().getLong(0)
-    if (observeOnCheckpoint == java.lang.Boolean.FALSE) {
-      val out = df.localCheckpoint(true)
+  /** Materialize `df` with `action` and return the result together with
+    * the value of `metric` (a long-valued aggregate over df's rows),
+    * carried by the action itself as a Dataset.observe metric. Listener
+    * delivery is async (post-action), so the wait is bounded; on a
+    * timeout the value comes from an explicit agg over the materialized
+    * frame, and the [[observeDelivers]] memo makes every later call skip
+    * the observe and the wait. Either path returns the same
+    * data-determined value, so no caller can branch on timing. A NULL
+    * aggregate reads as 0. */
+  private def withObserved(df: DataFrame, metric: Column)
+      (action: DataFrame => DataFrame): (DataFrame, Long) = {
+    def explicit(out: DataFrame): Long = {
+      val r = out.agg(metric).head()
+      if (r.isNullAt(0)) 0L else r.getLong(0)
+    }
+    if (observeDelivers == java.lang.Boolean.FALSE) {
+      val out = action(df)
       (out, explicit(out))
     } else {
       val obs = org.apache.spark.sql.Observation()
-      val out = df.observe(obs, metric.as("m")).localCheckpoint(true)
-      // listener delivery is async (post-action) — bounded wait, then
-      // fall back once and remember for the JVM
+      val out = action(df.observe(obs, metric.as("m")))
       try {
         val row = scala.concurrent.Await.result(obs.future,
           scala.concurrent.duration.Duration(2, "s"))
-        observeOnCheckpoint = java.lang.Boolean.TRUE
-        (out, row.getAs[Long]("m"))
+        observeDelivers = java.lang.Boolean.TRUE
+        (out, if (row.isNullAt(0)) 0L else row.getLong(0))
       } catch {
         case _: java.util.concurrent.TimeoutException =>
-          observeOnCheckpoint = java.lang.Boolean.FALSE
+          observeDelivers = java.lang.Boolean.FALSE
           (out, explicit(out))
       }
     }
   }
 
+  /** Eagerly checkpoint `df` and return it with the value of `metric`
+    * WITHOUT a second job: the aggregate rides the checkpoint's own
+    * action ([[withObserved]]). The old shape re-scanned every
+    * checkpointed round with a separate agg action — one extra job per
+    * round for every fixpoint consumer: the CC kernel's convergence sum
+    * (AnnOps) and PageRank's dangling-mass sum (GraphOps). Callers must
+    * coalesce the metric so an empty frame gives 0, not null. */
+  private[queries] def checkpointedWithSum(
+      df: DataFrame, metric: Column): (DataFrame, Long) =
+    withObserved(df, metric)(_.localCheckpoint(true))
+
   /** [[persistEager]] whose cache-filling count also delivers a
-    * long-valued aggregate over `df` via Dataset.observe — the
-    * fan-back short-circuit's data probe (round 18): the dedup family
-    * branches on the corpus's max exact-dup class size without paying
-    * a second job. Same bounded-wait + explicit-agg fallback contract
-    * as [[checkpointedWithSum]] (the fallback reads the just-filled
-    * cache, so either path returns the same data-determined value —
-    * the branch can never depend on timing). In a plan-inspection
-    * session (skipEagerMaterialize) no job runs, so the metric is None
+    * long-valued aggregate over `df` ([[withObserved]]) — the fan-back
+    * short-circuit's data probe (round 18): the dedup family branches on
+    * the corpus's max exact-dup class size without paying a second job.
+    * In a plan-inspection session no job runs, so the metric is None
     * and callers MUST take their general branch — plan digests stay
-    * data-independent. Callers coalesce NULL aggregates themselves if
-    * an empty frame is possible (getAs returns 0L for a null long
-    * here via the isNullAt guard). */
+    * data-independent. */
   private[queries] def persistEagerWithLong(
-      df: DataFrame, metric: Column): (DataFrame, Option[Long]) = {
-    if (df.sparkSession.conf
-        .get("spark.graft.skipEagerMaterialize", "false") == "true")
-      (df, None)
+      df: DataFrame, metric: Column): (DataFrame, Option[Long]) =
+    if (planOnly(df.sparkSession)) (df, None)
     else {
-      val obs = org.apache.spark.sql.Observation()
-      val p = df.observe(obs, metric.as("m"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      val v = try {
-        val row = scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(2, "s"))
-        if (row.isNullAt(0)) 0L else row.getAs[Long]("m")
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          val r = p.agg(metric.as("m")).head()
-          if (r.isNullAt(0)) 0L else r.getLong(0)
+      val (p, v) = withObserved(df, metric) { o =>
+        val p = o.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        p.count()
+        p
       }
       (p, Some(v))
     }
-  }
 
   /** Eagerly materialize `df` via localCheckpoint, then release the
     * internal caches it depended on. Sketch queries (minhash / simhash /
@@ -158,13 +137,12 @@ package object queries {
     */
   private[queries] def materializeAndFree(
       df: DataFrame, handles: DataFrame*): DataFrame = {
-    // Plan-inspection escape hatch: DumpPlans sets this so building the
-    // frame does NOT execute the sketch job (an eager localCheckpoint at
-    // plan-dump time would both run the full query and collapse the
-    // dumped plan to a LogicalRDD scan). Leaks the internal caches —
-    // acceptable only in a dump/inspection session, never the harness.
-    if (df.sparkSession.conf
-        .get("spark.graft.skipEagerMaterialize", "false") == "true") df
+    // Plan-inspection session: building the frame does NOT execute the
+    // sketch job (an eager localCheckpoint at plan-dump time would both
+    // run the full query and collapse the dumped plan to a LogicalRDD
+    // scan). Leaks the internal caches — acceptable only in a
+    // dump/inspection session, never the harness.
+    if (planOnly(df.sparkSession)) df
     else {
       val out = df.localCheckpoint(true)
       handles.foreach(_.unpersist())

@@ -149,6 +149,17 @@ class BenchSmearSpec extends AnyFunSuite {
     assert(Bench.stealPct(Some((1L, 100L)), Some((1L, 100L))).isEmpty)
   }
 
+  test("parseCpuLine: total is the first 8 fields; guest time is not counted twice") {
+    // guest/guest_nice (fields 9-10) are already inside user/nice
+    assert(Bench.parseCpuLine("cpu  100 20 30 800 10 5 5 30 70 15")
+      .contains((30L, 1000L)))
+    // a pre-guest kernel: exactly 8 fields
+    assert(Bench.parseCpuLine("cpu  100 20 30 800 10 5 5 30")
+      .contains((30L, 1000L)))
+    assert(Bench.parseCpuLine("cpu  100 20 30").isEmpty)
+    assert(Bench.parseCpuLine("cpu  a b c d e f g h").isEmpty)
+  }
+
   test("stealJiffies parses this host's /proc/stat when present") {
     // On a procfs host the sample is (steal, total) with total covering
     // at least user+idle; on anything else it must be None, never a
